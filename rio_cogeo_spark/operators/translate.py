@@ -193,6 +193,16 @@ class TileJobPlan:
         return [z for z, _ in self.level_zoom_decs]
 
 
+def require_quad(tms: Optional[grid.TileMatrixSet]) -> None:
+    """Tile-job plans decimate by parent cell (tx // 2), which only a quad
+    (power-of-2) tile matrix set defines."""
+    if tms is not None and not tms.is_quad:
+        raise IncompatibleOptions(
+            f"TMS {tms.id!r} is not a quad (power-of-2) tile matrix set; "
+            "tile-job plans require quad parent-cell decimation."
+        )
+
+
 def plan_tile_job(
     pages: DataFrame,
     max_zoom: int,
@@ -214,11 +224,7 @@ def plan_tile_job(
     (utils.py:120-140; reference tests/test_web.py:241-300), so every
     overview level down to k stays tile-aligned.
     """
-    if tms is not None and not tms.is_quad:
-        raise IncompatibleOptions(
-            f"TMS {tms.id!r} is not a quad (power-of-2) tile matrix set; "
-            "tile-job plans require quad parent-cell decimation."
-        )
+    require_quad(tms)
     b = pages.agg(
         F.min("lon").alias("w"),
         F.max("lon").alias("e"),

@@ -55,8 +55,14 @@ def cog_validate(
     properties: Optional[Dict[str, str]] = None,
     strict: bool = False,
 ) -> Tuple[bool, List[str], List[str]]:
-    """Run V1-V13. ``properties`` is the table-property dict (the ghost
-    header / driver analog)."""
+    """Run V1-V13. ``properties`` is the table-property dict (the analog of
+    the ghost header and the GDAL format name).
+
+    Reads ``tiles`` once: a single ``groupBy(zoom, tile_x, tile_y).count()``
+    then ``groupBy(zoom).max`` answers both V2 (zooms present) and V10
+    (duplicate tile keys). ``meta``'s ``n_tiles`` column is not read, so a
+    :func:`~rio_cogeo_spark.operators.translate.tiles_meta` frame's
+    per-zoom count join is pruned from the plan."""
     errors, warnings, _ = _validate_impl(tiles, meta, properties, strict)
     return (len(errors) == 0), errors, warnings
 
@@ -84,13 +90,13 @@ def _validate_impl(
     if not check("v1_format", fmt in ("parquet", "iceberg")):
         return errors, warnings, checks
 
-    meta_rows = (
+    # one row per level: sorted in Python, not by a Spark range sort
+    meta_rows = sorted(
         meta.select(
             "zoom", "level", "width", "height", "blocksize_x", "blocksize_y",
-            "decimation", "write_index", "n_tiles",
-        )
-        .orderBy("zoom")
-        .collect()
+            "decimation", "write_index",
+        ).collect(),
+        key=lambda r: r["zoom"],
     )
     if not meta_rows:
         errors.append("tiles_meta is empty: no levels written.")
@@ -109,11 +115,20 @@ def _validate_impl(
     # have been committed before/with the data write.
     check("v5_header_first", properties.get("meta_written_first", "YES") == "YES")
 
+    # One pass over the tiles answers V2 and V10: the largest multiplicity
+    # of a tile key per zoom. Its keys are the zooms present in the tiles
+    # table; a multiplicity above 1 is a duplicate tile.
+    key_mult = {
+        r["zoom"]: r["mult"]
+        for r in tiles.groupBy("zoom", "tile_x", "tile_y").count()
+        .groupBy("zoom").agg(F.max("count").alias("mult"))
+        .collect()
+    }
+
     # V2 (cogeo.py:521-524): no external overviews — every zoom present in
     # the tiles table must be declared in tiles_meta.
     declared = {r["zoom"] for r in meta_rows}
-    present = {r["zoom"] for r in tiles.select("zoom").distinct().collect()}
-    check("v2_no_external_overviews", not (present - declared))
+    check("v2_no_external_overviews", not (set(key_mult) - declared))
 
     # V3 (cogeo.py:527-531): a big dataset must be tiled. The reference
     # checks `src.is_tiled` (ANY declared block shape qualifies — 256-px
@@ -184,14 +199,7 @@ def _validate_impl(
     # Data-level discipline: within every zoom the engine's write key is
     # (tile_y, tile_x); verify no duplicate tile keys (a duplicate would
     # break the one-block-one-offset contract).
-    dupes = (
-        tiles.groupBy("zoom", "tile_x", "tile_y")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    check("v10_no_duplicate_tiles", dupes == 0)
+    check("v10_no_duplicate_tiles", all(m == 1 for m in key_mult.values()))
 
     # V12 (cogeo.py:475,701): strict mode promotes warnings to errors.
     if strict:

@@ -15,18 +15,22 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
+import time
 from typing import List, Optional, Tuple
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rio_cogeo_spark.operators.translate import (
     BandSpec,
     TileJobPlan,
+    _plan_from_tile_extent,
     base_tiles,
     default_bands,
     next_level,
-    plan_tile_job,
+    require_quad,
 )
 from rio_cogeo_spark.profiles import CogSparkProfile, cog_profiles
 
@@ -99,17 +103,68 @@ def _manifest_path(root: str, zoom: int) -> str:
     return os.path.join(root, f"_manifest_z{zoom}.json")
 
 
+def _footer_stats(path: str) -> Tuple[List[dict], Tuple[int, int, int, int]]:
+    """Per-file row counts and the ``(tx0, ty0, tx1, ty1)`` tile extent of
+    a written level, read from its parquet footers alone — no Spark job.
+    ``partition`` is the write task's file index (the NNNNN of
+    ``part-NNNNN``)."""
+    parts = []
+    lo = {"tile_x": None, "tile_y": None}
+    hi = dict(lo)
+    for name in sorted(os.listdir(path)):
+        if not (name.startswith("part-") and name.endswith(".parquet")):
+            continue
+        md = pq.read_metadata(os.path.join(path, name))
+        parts.append({"partition": int(name[5:10]), "rows": md.num_rows})
+        for g in (md.row_group(i) for i in range(md.num_row_groups)):
+            for col in lo:
+                st = g.column(md.schema.names.index(col)).statistics
+                if st is not None and st.has_min_max:
+                    lo[col] = st.min if lo[col] is None else min(lo[col], st.min)
+                    hi[col] = st.max if hi[col] is None else max(hi[col], st.max)
+                elif st is None or st.null_count != g.num_rows:
+                    raise RuntimeError(f"{name}: no min/max statistics for {col}")
+    return parts, (lo["tile_x"], lo["tile_y"], hi["tile_x"], hi["tile_y"])
+
+
+def _write_manifest(path: str, manifest: dict) -> None:
+    """Crash-safe manifest: temp file, flush, fsync, then an atomic
+    rename over the old one — a reader sees the old manifest or the new
+    one, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 def _write_level(
     tiles: DataFrame, root: str, zoom: int, compression: Optional[str] = None
 ) -> dict:
-    """Atomic level commit: write to a temp dir, fsync the manifest last
-    (the parquet stand-in for an Iceberg snapshot commit). The manifest
-    records per-partition row counts — the 'per-partition lineage +
-    tile-count metrics' of the north_star. ``compression`` is the
-    profile/creation-option parquet codec (reference profiles.py:10-18
-    COMPRESS= creation option)."""
+    """Atomic level commit (the parquet stand-in for an Iceberg snapshot
+    commit): write the level to a temp dir, rename it into place, then
+    write the manifest last with :func:`_write_manifest`. A level whose
+    manifest is missing or unreadable is rebuilt on resume.
+
+    The manifest's numbers come from the parquet footers of the files just
+    written, so the commit runs no Spark job beyond the write itself:
+
+    * ``n_tiles`` — rows in the level;
+    * ``partitions`` — one ``{"partition", "rows"}`` per part file, where
+      ``partition`` is the write task's file index (it used to be the id of
+      a read-back split);
+    * ``skew`` — max / median rows per part file;
+    * ``extent`` — ``[tx0, ty0, tx1, ty1]`` from the footers' tile_x /
+      tile_y min/max statistics;
+    * ``wall_s`` — the level's write time.
+
+    An empty level is refused before anything is committed; only an empty
+    pages table produces one. ``compression`` is the profile/creation-option
+    parquet codec (reference profiles.py:10-18 COMPRESS= creation option)."""
     tmp = os.path.join(root, f"_tmp_z{zoom}")
     final = _level_dir(root, zoom)
+    t0 = time.perf_counter()
     w = (
         tiles.repartitionByRange(8, "tile_y", "tile_x")
         .sortWithinPartitions("tile_y", "tile_x")
@@ -118,25 +173,24 @@ def _write_level(
     if compression:
         w = w.option("compression", compression)
     w.parquet(tmp)
-    back = tiles.sparkSession.read.parquet(tmp)
-    per_part = [
-        {"partition": int(r["pid"]), "rows": int(r["rows"])}
-        for r in back.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    ]
-    n_tiles = sum(p["rows"] for p in per_part)
+    parts, extent = _footer_stats(tmp)
+    if extent[0] is None:  # no row with a tile: nothing to plan over
+        shutil.rmtree(tmp)
+        raise ValueError("cannot plan a tile job over an empty pages table")
     if os.path.exists(final):
         shutil.rmtree(final)
     os.rename(tmp, final)
+    rows = [p["rows"] for p in parts]
     manifest = {
         "zoom": zoom,
-        "n_tiles": n_tiles,
-        "partitions": per_part,
+        "n_tiles": sum(rows),
+        "partitions": parts,
+        "skew": max(rows) / statistics.median(rows),
+        "extent": list(extent),
+        "wall_s": round(time.perf_counter() - t0, 3),
         "complete": True,
     }
-    with open(_manifest_path(root, zoom), "w") as f:
-        json.dump(manifest, f)
+    _write_manifest(_manifest_path(root, zoom), manifest)
     return manifest
 
 
@@ -170,6 +224,14 @@ def resumable_pyramid(
     manifest is already complete — kill the job between levels and rerun
     to resume. Returns (plan, manifests).
 
+    The base level is written first and the plan is derived from its
+    footer extent (:func:`_write_level`), the way ``cog_translate`` plans
+    from the base level: tile_index is monotonic per axis, so the plan
+    equals :func:`plan_tile_job`'s without its separate pages scan. An
+    empty pages table raises ``ValueError`` before any manifest is
+    written. Each committed level is read back with the schema of the
+    DataFrame that produced it, so Spark infers nothing from the files.
+
     ``dtype`` (Spark type name) casts every band on write, and each
     overview re-aggregates the CASTED committed level below it — exactly
     GDAL's order of operations under ``--dtype`` (the VRT cast happens at
@@ -178,40 +240,40 @@ def resumable_pyramid(
     ``--co`` parquet codec."""
     from rio_cogeo_spark import grid as _grid
 
+    require_quad(tms)
     spark = pages.sparkSession
     bands = bands or default_bands()
     os.makedirs(root, exist_ok=True)
-    plan = plan_tile_job(
-        pages,
+
+    def commit(level: DataFrame, z: int) -> Tuple[dict, DataFrame]:
+        if dtype is not None:
+            level = level.select(
+                "tile_x", "tile_y",
+                *[F.col(b.name).cast(dtype).alias(b.name) for b in bands],
+            )
+        if _level_complete(root, z):
+            with open(_manifest_path(root, z)) as f:
+                manifest = json.load(f)
+        else:
+            manifest = _write_level(level, root, z, compression=compression)
+        return manifest, spark.read.schema(level.schema).parquet(_level_dir(root, z))
+
+    base, prev = commit(base_tiles(pages, max_zoom, bands, tms=tms).drop("zoom"), max_zoom)
+    # a base manifest committed before extents were recorded has none
+    extent = base.get("extent") or _footer_stats(_level_dir(root, max_zoom))[1]
+    plan = _plan_from_tile_extent(
+        *extent,
         max_zoom,
         overview_level,
         decimation_base,
         blocksize=blocksize or _grid.DEFAULT_BLOCKSIZE,
         aligned_levels=aligned_levels,
         overview_blocksize=overview_blocksize,
-        tms=tms,
     )
-
-    manifests = []
-    prev: Optional[DataFrame] = None
-    for z, dec in plan.level_zoom_decs:
-        if _level_complete(root, z):
-            with open(_manifest_path(root, z)) as f:
-                manifests.append(json.load(f))
-            prev = spark.read.parquet(_level_dir(root, z))
-            continue
-        if dec == 1:
-            level = base_tiles(pages, z, bands, tms=tms).drop("zoom")
-        else:
-            assert prev is not None
-            level = next_level(prev, z, decimation_base, bands).drop("zoom")
-        if dtype is not None:
-            level = level.select(
-                "tile_x", "tile_y",
-                *[F.col(b.name).cast(dtype).alias(b.name) for b in bands],
-            )
-        manifests.append(_write_level(level, root, z, compression=compression))
-        prev = spark.read.parquet(_level_dir(root, z))
+    manifests = [base]
+    for z in plan.zooms[1:]:
+        manifest, prev = commit(next_level(prev, z, decimation_base, bands).drop("zoom"), z)
+        manifests.append(manifest)
     return plan, manifests
 
 
